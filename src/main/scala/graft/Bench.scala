@@ -1,24 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     // runs per query; the reported time is the MIN across runs. One cold
     // run per query measured codegen/JIT noise as phantom 2-6× regressions
     // (round-5 verdict: recorded 126 s vs judge-reproduced 65 s on the
     // same machine) — min-of-2 reports steady-state work, not warmup.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.driver()
     // untimed warmup: JIT/codegen/parquet-reader init otherwise lands on
     // whichever query runs first and distorts its number
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -56,7 +45,8 @@ object Bench {
         // busy = total − idle − iowait (fields 4,5 zero-indexed 3,4)
         f.sum - f(3) - (if (f.length > 4) f(4) else 0L)
       } catch { case _: Exception => -1L }
-    val nCores = cpus.toInt
+    // local[n]'s default parallelism is n
+    val nCores = spark.sparkContext.defaultParallelism
     // (externalCoreSeconds, wallSeconds) accumulated over every timed run
     var externAccum = 0.0
     var wallAccum = 0.0
@@ -245,7 +235,6 @@ object Bench {
         pb.environment().put("SPARK_GRAFT_BENCH_CHILD", "1")
         pb.environment().put("SPARK_GRAFT_BENCH_DETAIL_FILE", tmp.toString)
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
         // the child's compact stdout line must never reach OUR stdout
         // (the driver parses our tail); its [bench] diagnostics join our
         // stderr like any other progress output

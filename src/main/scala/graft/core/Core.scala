@@ -91,22 +91,22 @@ object SqlTypes {
 
 /** Session factory with the scale-aware defaults this engine assumes:
   * AQE on (skew-join + partition coalescing), shuffle partitions sized to
-  * cores rather than the 200 default, explicit session time zone
-  * (ref session handling: dsgrid/utils/spark.py:76-125,854-864). */
+  * cores rather than the 200 default, UTC session time zone
+  * (ref session handling: dsgrid/utils/spark.py:76-125,854-864). Every
+  * session the CLI, the drivers, the tools and the test suite run is built
+  * here, so what is tested and benched is what ships. */
 object GraftSession {
   def builder(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = 32,
-      timeZone: String = "UTC"): SparkSession.Builder =
-    SparkSession
-      .builder()
+      shufflePartitions: Int = 32): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", timeZone)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // Parquet TIMESTAMP(NANOS) columns (unsupported natively) surface as
       // long nanos; readers convert explicitly (`timestamp_micros(ns div 1000)`).
@@ -122,6 +122,17 @@ object GraftSession {
     s
   }
 
+  /** The batch drivers' session (Bench, Verify, PlanLintSweep, ScaleProbe,
+    * Profile): `local[$SPARK_GRAFT_CPUS]`, default every core, with one
+    * shuffle partition per core. */
+  def driver(): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val s = builder(s"local[$cores]", cores).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Run a thunk with a temporarily overridden session time zone
     * (ref: dsgrid/query/query_submitter.py:697-714 restarts the session for
     * this; in-JVM a scoped conf set/restore suffices). */
@@ -132,4 +143,57 @@ object GraftSession {
     try f
     finally spark.conf.set(key, old)
   }
+}
+
+/** Order-preserving parallel map for INDEPENDENT Spark actions (guide
+  * §2.6: actions are only sequential because the driver calls them
+  * sequentially — overlapping independent jobs lets the scheduler back-fill
+  * executors from the next job's tasks while the current one drains its
+  * tail). Spark driver calls are thread-safe; results come back in input
+  * order, so an assembled frame is bit-identical to the sequential loop's.
+  * Use ONLY when iterations touch disjoint state.
+  *
+  * Runs on a bounded dedicated pool (the global EC would serialize behind
+  * other work; an unbounded one could swamp the scheduler). Each worker
+  * sets `spark` as its active session itself — Spark 4's
+  * `SparkPlan.session` is `getActiveSession.orNull`, and a pool thread
+  * only inherits the active session if its creator had one, so a parquet
+  * write from a caller without one would NPE. The first failure, or
+  * [[Timeout]], cancels the siblings' jobs (tagged per call) and
+  * interrupts their threads before it propagates. */
+object ParActions {
+  /** Parallel actions per call. */
+  val Threads = 4
+
+  /** Longest one call may run: far above any registry copy or catalog
+    * sweep, so reaching it means a job hung. */
+  val Timeout: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(6, "hours")
+
+  def apply[A, B](spark: SparkSession, xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.isEmpty) Nil
+    else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(Threads, xs.size))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val all = Future.traverse(xs) { a =>
+        Future {
+          SparkSession.setActiveSession(spark)
+          spark.sparkContext.addJobTag(tag)
+          f(a)
+        }
+      }
+      try Await.result(all, Timeout)
+      catch {
+        case e: Throwable =>
+          // interrupt the siblings and cancel their jobs; cancel again once
+          // they have unwound, for a job submitted between the two
+          pool.shutdownNow()
+          spark.sparkContext.cancelJobsWithTag(tag)
+          pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
+          spark.sparkContext.cancelJobsWithTag(tag)
+          throw e
+      } finally pool.shutdown()
+    }
 }

@@ -38,7 +38,7 @@ private[graft] object Catalog10 {
       val root = java.nio.file.Files.createTempDirectory("graft-residue").toString
       val base = residueBase(s, dir)
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      QueryDsl.parActions(0 until 3)(m =>
+      graft.core.ParActions(s, 0 until 3)(m =>
         writeOne(root, base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
     })
 
@@ -72,7 +72,7 @@ private[graft] object Catalog10 {
       TxnLog.mergeCopyOnWrite(s, logDir, s"$root/merged", updates, "key")
       TxnLog.restore(s, logDir, 0)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 3L) { v =>
+      graft.core.ParActions(s, 0L to 3L) { v =>
         val agg = TxnLog.readAsOfWithDeletes(s, logDir, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
           .head()
@@ -120,7 +120,7 @@ private[graft] object Catalog10 {
       val root = java.nio.file.Files.createTempDirectory("graft-q273").toString
       val (logDir, fs, base) = residueTable(s, dir, root)
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val Seq(m0a, m1b) = QueryDsl.parActions(Seq(
+      val Seq(m0a, m1b) = graft.core.ParActions(s, Seq(
         ("m0a", 0, 10L), ("m1b", 1, 100L))) { case (name, res, mult) =>
         writeOne(root, base.filter(col("key") % 3 === res)
           .select(col("key"), (col("key") * mult).as("value")), name)
@@ -132,7 +132,7 @@ private[graft] object Catalog10 {
         catch { case _: java.util.ConcurrentModificationException => true }
       val head = TxnLog.latestVersion(logDir).get
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(Seq(("a", vA, false), ("b", vB, false), ("c", head, cConflict))) {
+      graft.core.ParActions(s, Seq(("a", vA, false), ("b", vB, false), ("c", head, cConflict))) {
         case (w, v, conflict) =>
           val agg = TxnLog.readAsOf(s, logDir, v)
             .agg(count(lit(1)).cast("long"), sum(col("value")).cast("long")).head()
@@ -186,7 +186,7 @@ private[graft] object Catalog10 {
       TxnLog.commit(logDir, 2, adds = Seq(appended), removes = Nil)
       val srcAtClone = TxnLog.liveFiles(logDir, 1)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(Seq(("clone", cloneLog, 0L), ("clone", cloneLog, 1L),
+      graft.core.ParActions(s, Seq(("clone", cloneLog, 0L), ("clone", cloneLog, 1L),
         ("src", logDir, 1L), ("src", logDir, 2L))) { case (tbl, log, v) =>
         val agg = TxnLog.readAsOfWithDeletes(s, log, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
@@ -242,14 +242,14 @@ private[graft] object Catalog10 {
         (col("p_partkey") * 2).cast("long").as("value"))
       val half = base.agg(max("key")).head.getLong(0) / 2
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val old = QueryDsl.parActions(Seq(
+      val old = graft.core.ParActions(s, Seq(
         ("old0", col("key") <= half), ("old1", col("key") > half))) {
         case (name, pred) => writeOne(root, base.filter(pred), name)
       }
       TxnLog.commit(logDir, 0, adds = old, removes = Nil)
       val fresh = base.filter(col("key") % 25 === 0).select(
         (col("key") + 10000000L).as("key"), col("cat"), (col("key") * 3).as("value"))
-      val parts = QueryDsl.parActions(0 until 4) { c =>
+      val parts = graft.core.ParActions(s, 0 until 4) { c =>
         writeOne(root, fresh.filter(col("cat") === c), s"cat$c") -> s"cat=$c"
       }
       TxnLog.commit(logDir, 1, adds = parts.map(_._1), removes = Nil,
@@ -293,7 +293,7 @@ private[graft] object Catalog10 {
       TxnLog.commit(logDir, 2, adds = Seq(writeOne(root, appended, "v2")), removes = Nil)
       TxnLog.renameColumn(s, logDir, "amount", "amt")
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 3L) { v =>
+      graft.core.ParActions(s, 0L to 3L) { v =>
         val snap = TxnLog.readAsOfMapped(s, logDir, v)
         val valueCol = snap.columns.filter(_ != "key").head
         val agg = snap.agg(count(lit(1)).cast("long"), sum(col(valueCol)).cast("long")).head()
@@ -620,7 +620,7 @@ private[graft] object Catalog10 {
       TxnLog.compact(s, logDir, s"$root/opt", targetFiles = 4,
         bucket = Some(pmod(col("key"), lit(4))))
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 3L) { v =>
+      graft.core.ParActions(s, 0L to 3L) { v =>
         val agg = TxnLog.readAsOfWithDeletes(s, logDir, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
           .head()

@@ -703,7 +703,7 @@ private[graft] object Catalog9 {
         new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
       }
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val Seq(f0a, f0b) = QueryDsl.parActions(Seq(
+      val Seq(f0a, f0b) = graft.core.ParActions(s, Seq(
         ("even", col("event_id") % 2 === 0), ("odd", col("event_id") % 2 === 1))) {
         case (name, pred) => writeOne(ev.filter(pred), name)
       }
@@ -714,7 +714,7 @@ private[graft] object Catalog9 {
         .select((col("event_id") + 10000000L).as("event_id"), col("user_id")), "late")
       TxnLog.commit(logDir, 2, adds = Seq(f2), removes = Nil)
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 2L) { v =>
+      graft.core.ParActions(s, 0L to 2L) { v =>
         val snap = TxnLog.readAsOf(s, logDir, v)
         (v, TxnLog.liveFiles(logDir, v).size.toLong, snap.count())
       }.toDF("version", "n_files", "n_rows")

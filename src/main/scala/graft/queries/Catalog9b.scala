@@ -813,8 +813,8 @@ private[graft] object Catalog9b {
         new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
       }
       // disjoint-path fixture writes + post-final-log version reads run
-      // overlapped (QueryDsl.parActions, guide §2.6)
-      val fs = QueryDsl.parActions(0 until 3)(m =>
+      // overlapped (ParActions, guide §2.6)
+      val fs = graft.core.ParActions(s, 0 until 3)(m =>
         writeOne(base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
       TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
       // updates: keys % 300 == 0 (all in the mod-3==0 file) replace their
@@ -826,7 +826,7 @@ private[graft] object Catalog9b {
             ((col("key") + 10000000L) * 1000).as("value")))
       TxnLog.mergeCopyOnWrite(s, logDir, s"$root/merged", updates, "key")
       val v0Files = TxnLog.liveFiles(logDir, 0)
-      QueryDsl.parActions(0L to 1L) { v =>
+      graft.core.ParActions(s, 0L to 1L) { v =>
         val live = TxnLog.liveFiles(logDir, v)
         val agg = TxnLog.readAsOf(s, logDir, v)
           .agg(count(lit(1)).cast("long"), sum(col("value")).cast("long")).head()
@@ -877,13 +877,13 @@ private[graft] object Catalog9b {
         new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
       }
       // disjoint-path fixture writes + post-final-log version reads run
-      // overlapped (QueryDsl.parActions, guide §2.6)
-      val fs = QueryDsl.parActions(0 until 3)(m =>
+      // overlapped (ParActions, guide §2.6)
+      val fs = graft.core.ParActions(s, 0 until 3)(m =>
         writeOne(base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
       TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv1", col("key") % 7 === 0)
       TxnLog.deleteMergeOnRead(s, logDir, s"$root/dv2", col("key") % 11 === 0)
-      QueryDsl.parActions(0L to 2L) { v =>
+      graft.core.ParActions(s, 0L to 2L) { v =>
         val agg = TxnLog.readAsOfWithDeletes(s, logDir, v)
           .agg(count(lit(1)).cast("long"), coalesce(sum(col("value")), lit(0L)).cast("long"))
           .head()
@@ -937,7 +937,7 @@ private[graft] object Catalog9b {
         new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
       }
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val Seq(f0a, f0b) = QueryDsl.parActions(Seq(
+      val Seq(f0a, f0b) = graft.core.ParActions(s, Seq(
         ("even", col("event_id") % 2 === 0), ("odd", col("event_id") % 2 === 1))) {
         case (name, pred) => writeOne(ev.filter(pred), name)
       }
@@ -991,7 +991,7 @@ private[graft] object Catalog9b {
         new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get.getAbsolutePath
       }
       // disjoint-path fixture writes run overlapped (guide §2.6)
-      val fs = QueryDsl.parActions(0 until 3)(m =>
+      val fs = graft.core.ParActions(s, 0 until 3)(m =>
         writeOne(base.filter(pmod(col("key"), lit(3)) === m), s"m$m"))
       TxnLog.commit(logDir, 0, adds = fs, removes = Nil)
       // v1: CoW merge — value 1000k+1 (odd) can never equal an original 2k
@@ -1274,7 +1274,7 @@ private[graft] object Catalog9b {
           .count()
       }
       // three independent post-optimize reads run overlapped (guide §2.6)
-      val Seq(before, after, rect) = QueryDsl.parActions(Seq(0, 1, 2)) {
+      val Seq(before, after, rect) = graft.core.ParActions(s, Seq(0, 1, 2)) {
         case 0 => boxOpens(0)
         case 1 => boxOpens(v1)
         case _ => TxnLog.readAsOf(s, logDir, v1)
@@ -1346,7 +1346,7 @@ private[graft] object Catalog9b {
         .select(col("key"), (col("key") * 5).as("value"), (col("key") * 7).as("w"))
       TxnLog.mergeCopyOnWrite(s, logDir, s"$root/merged", updates, "key")
       // post-final-log version reads run overlapped (guide §2.6)
-      QueryDsl.parActions(0L to 2L) { v =>
+      graft.core.ParActions(s, 0L to 2L) { v =>
         val snap = TxnLog.readAsOf(s, logDir, v)
         val withW = if (snap.columns.contains("w")) snap
           else snap.withColumn("w", lit(null).cast("long"))

@@ -23,6 +23,12 @@ object Json {
     m
   }
 
+  /** `s` as a JSON string literal, quotes included, with every control
+    * character escaped — the one escape behind every hand-assembled JSON
+    * artifact (a raw newline in an error message makes the file
+    * unparseable). */
+  def quote(s: String): String = mapper.writeValueAsString(s)
+
   def parseProjectQuery(json: String): ProjectQuery = {
     val n = mapper.readTree(json)
     ProjectQuery(

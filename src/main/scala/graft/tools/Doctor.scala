@@ -117,11 +117,11 @@ object Doctor {
     }
     val pass = steps.forall(_.ok)
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import graft.query.Json.quote
     val body = steps.map(s =>
-      s"""${q(s.name)}:{"ok":${s.ok},"seconds":${fmt(s.seconds)},"detail":${q(s.detail)}}""")
+      s"""${quote(s.name)}:{"ok":${s.ok},"seconds":${fmt(s.seconds)},"detail":${quote(s.detail)}}""")
       .mkString("{", ",", "}")
-    val json = s"""{"pass":$pass,"sf":${q(sfDir)},"work":${q(work)},"steps":$body}"""
+    val json = s"""{"pass":$pass,"sf":${quote(sfDir)},"work":${quote(work)},"steps":$body}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     println(json)
     if (!pass) sys.exit(1)

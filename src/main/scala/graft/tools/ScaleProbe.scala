@@ -616,14 +616,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--synthesize")) {
       val Array(_, src, dst, k) = args.take(4)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      val s = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = graft.core.GraftSession.driver()
       synthesize(s, src, dst, k.toInt)
       s.stop()
       return
@@ -633,19 +626,8 @@ object ScaleProbe {
     val outFile = args.lift(2).getOrElse("SCALE.json")
     // growth factor between the two directories' data volumes; sf encodes it
     val factor = args.lift(3).map(_.toDouble).getOrElse(10.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.driver()
     // untimed warmup (JIT/codegen/parquet-reader init)
     try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
@@ -706,18 +688,19 @@ object ScaleProbe {
       } catch {
         case e: Throwable =>
           val msg = (s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("")).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+            Option(e.getMessage).getOrElse("")).take(200)
           System.err.println(f"[scale] $name%-24s ERROR $msg")
           (name, 0.0, 0.0, 0.0, bound, false, Some(msg))
       }
     }
     val allPass = results.forall(_._6)
+    import graft.query.Json.quote
     val body = results.map { case (n, ts, tb, e, b, p, err) =>
-      s""""$n":{"t_small":${fmt(ts)},"t_big":${fmt(tb)},"exponent":${fmt(e)},""" +
-        s""""bound":$b,"pass":$p${err.map(m => s""","error":"$m"""").getOrElse("")}}"""
+      s"""${quote(n)}:{"t_small":${fmt(ts)},"t_big":${fmt(tb)},"exponent":${fmt(e)},""" +
+        s""""bound":$b,"pass":$p${err.map(m => s""","error":${quote(m)}""").getOrElse("")}}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"small":"$smallDir","big":"$bigDir","factor":$factor,"runs":$runs,""" +
+      s"""{"small":${quote(smallDir)},"big":${quote(bigDir)},"factor":$factor,"runs":$runs,""" +
         s""""probes":$body,"pass":$allPass}"""
     // a filtered dev run must never clobber the full-gate artifact
     // (the bench_detail.json lesson) — partials land in a sidecar

@@ -43,6 +43,14 @@ class QuerySpec extends SparkSpec {
     reg
   }
 
+  test("Json.quote round-trips quotes, backslashes and control characters through a parser") {
+    val s = "a\"b\\c\n\t\u0001"
+    val lit = graft.query.Json.quote(s)
+    assert(!lit.exists(_ < ' '))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s"""{"k":$lit}""")
+    assert(parsed.get("k").asText() == s)
+  }
+
   test("project query end-to-end: map, combine, filter, aggregate, names, sort") {
     val reg = buildRegistry()
     val q = ProjectQuery(

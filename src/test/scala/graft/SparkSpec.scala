@@ -2,23 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 
 /** Shared local session for all specs (one JVM-wide session keeps the suite
-  * fast; specs only create tiny in-memory frames). */
+  * fast; specs only create tiny in-memory frames). Built by the same factory
+  * as the CLI and the drivers, so the suite runs with the shipped config. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -32,13 +23,21 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   // write command then NPEs ("sparkSession is null" in
   // InsertIntoHadoopFsRelationCommand.run; VERIFY_r18 caught it once in
   // TopKSpec). Pin both session slots on whichever thread first touches
-  // `spark` in each suite instance (tests of one suite run on that thread).
-  lazy val spark: SparkSession = {
-    val s = TestSession.spark
+  // `spark` (suite construction) and, as ScalaTest does not promise one
+  // thread per suite, again on the thread of every test body.
+  lazy val spark: SparkSession = pinned(TestSession.spark)
+
+  override def withFixture(test: NoArgTest): Outcome = {
+    pinned(spark)
+    super.withFixture(test)
+  }
+
+  private def pinned(s: SparkSession): SparkSession = {
     SparkSession.setDefaultSession(s)
     SparkSession.setActiveSession(s)
     s
   }
+
   import spark.implicits._
 
   def rows(df: DataFrame): Seq[Seq[Any]] =
